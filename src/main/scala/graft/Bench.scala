@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: times every registered query at the target
   * scale factor, one JSON line on stdout (driver contract).
   *
@@ -19,21 +17,88 @@ import org.apache.spark.sql.SparkSession
   * median then drops one bad sample per query entirely. `value` is the
   * sum of medians, `value_min` the sum of per-query minima (the
   * low-noise floor), `passes` says how many rounds contributed.
+  *
+  * A query that throws in any pass is FAILED: it is left out of
+  * `value`, `value_min` and the per-query detail (the time to a failure
+  * is not a sample of the query), and counted in `n_failed`;
+  * `n_queries` still counts every query timed.
   */
 object Bench {
+
+  /** One timed run: per-query medians and minima of the queries that
+    * succeeded in every pass, plus the names of those that failed.
+    */
+  final case class Result(medians: Seq[(String, Double)],
+      mins: Map[String, Double], failed: Seq[String]) {
+    def nQueries: Int = medians.size + failed.size
+    def total: Double = medians.map(_._2).sum
+    def totalMin: Double = medians.map(r => mins(r._1)).sum
+  }
+
+  /** Time `named` over `passes` round-robin passes (seconds). */
+  def measure(named: Seq[(String, () => Unit)], passes: Int): Result = {
+    val samples = scala.collection.mutable.Map.empty[String, Vector[Double]]
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    (1 to passes).foreach { _ =>
+      named.foreach { case (name, run) =>
+        val t0 = System.nanoTime()
+        try {
+          run()
+          val dt = (System.nanoTime() - t0) / 1e9
+          samples(name) = samples.getOrElse(name, Vector.empty) :+ dt
+        } catch { case e: Throwable =>
+          if (failed.add(name))
+            System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        }
+      }
+    }
+    def median(v: Vector[Double]): Double = v.sorted.apply(v.size / 2)
+    val ok = named.map(_._1).filterNot(failed)
+    Result(ok.map(n => n -> median(samples(n))),
+      ok.map(n => n -> samples(n).min).toMap, failed.toSeq)
+  }
+
+  // Only the LAST 2000 chars of output are kept by the bench's
+  // consumer, so the JSON line must stay well under that to parse:
+  // per-query detail is limited to a fixed headline subset (one per
+  // major category, stable round over round) at 3-decimal precision;
+  // "value" is still the total across all succeeded queries and
+  // n_queries says how many ran.
+  private val headline = Set(
+    "agg_pricing_summary", "join_star_revenue", "window_top_orders",
+    "sort_top_orders", "dedup_exact_md5", "dedup_shingle_jaccard",
+    "dedup_minhash_lsh", "dedup_components", "dedup_survivors",
+    "sim_cosine_topk", "sim_ann_ivf_topk", "sim_ann_pq_topk",
+    "text_tfidf_top", "text_langid", "text_gopher_quality",
+    "events_sessionize", "events_asof_join", "pipeline_corpus_funnel",
+    "pipeline_token_budget", "pipeline_pack_sequences",
+    "multimodal_dhash_pairs", "zorder_cluster", "window_topk_rewrite",
+    "sql_recursive_cte",
+    // round-6 additions (one per new family)
+    "graph_label_prop", "dedup_containment", "sim_matryoshka_recall",
+    "join_jaro_names",
+    // round-7 additions: the FFT-accelerated audio match and one
+    // trainer readout (the round's oracle-conversion + perf focus)
+    "multimodal_audio_match", "text_bpe_vocab")
+
+  private def r3(v: Double): String = "%.3f".formatLocal(java.util.Locale.US, v)
+
+  /** The JSON line for `r` that `main` prints last on stdout. */
+  def jsonLine(r: Result, passes: Int, sfDir: String): String = {
+    val qs = r.medians.filter(m => headline(m._1))
+      .map { case (k, v) => "\"" + k + "\":" + r3(v) }
+      .mkString("{", ",", "}")
+    s"""{"metric":"total","value":${r3(r.total)},"unit":"sec","stat":"median","passes":$passes,"value_min":${r3(r.totalMin)},"n_queries":${r.nQueries},"n_failed":${r.failed.size},"queries":$qs,"sf":"$sfDir"}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
-    // same session wiring as Graft.session/Verify: graftx extensions on
-    // by default so benched plans are the plans a library user gets
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new org.apache.spark.sql.graftx.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // same session wiring as Verify: graftx extensions on by default
+    // so benched plans are the plans a library user gets
+    val spark = Graft.session(master = s"local[$cpus]",
+      shufflePartitions = cpus)
     spark.sparkContext.setLogLevel("WARN")
     val warmupDir = "/root/testdata/sf0.001"
     val named = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -41,56 +106,22 @@ object Bench {
       try fn(spark, warmupDir).count()
       catch { case _: Throwable => () }
     }
-    val samples = scala.collection.mutable.Map.empty[String, Vector[Double]]
-    (1 to passes).foreach { _ =>
-      named.foreach { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
-        val dt = (System.nanoTime() - t0) / 1e9
-        samples(name) = samples.getOrElse(name, Vector.empty) :+ dt
-      }
+    val runs = named.map { case (name, fn) =>
+      name -> (() => { fn(spark, sfDir).count(); () })
     }
-    def median(v: Vector[Double]): Double = v.sorted.apply(v.size / 2)
-    val results = named.map { case (name, _) => name -> median(samples(name)) }
-    val mins = named.map { case (name, _) => name -> samples(name).min }.toMap
-    // The driver keeps only the LAST 2000 chars of output, so the JSON
-    // line must stay well under that to parse: per-query detail is
-    // limited to a fixed headline subset (one per major category,
-    // stable round over round) at 3-decimal precision; "value" is still
-    // the total across ALL queries and n_queries says how many ran.
-    val headline = Set(
-      "agg_pricing_summary", "join_star_revenue", "window_top_orders",
-      "sort_top_orders", "dedup_exact_md5", "dedup_shingle_jaccard",
-      "dedup_minhash_lsh", "dedup_components", "dedup_survivors",
-      "sim_cosine_topk", "sim_ann_ivf_topk", "sim_ann_pq_topk",
-      "text_tfidf_top", "text_langid", "text_gopher_quality",
-      "events_sessionize", "events_asof_join", "pipeline_corpus_funnel",
-      "pipeline_token_budget", "pipeline_pack_sequences",
-      "multimodal_dhash_pairs", "zorder_cluster", "window_topk_rewrite",
-      "sql_recursive_cte",
-      // round-6 additions (one per new family)
-      "graph_label_prop", "dedup_containment", "sim_matryoshka_recall",
-      "join_jaro_names",
-      // round-7 additions: the FFT-accelerated audio match and one
-      // trainer readout (the round's oracle-conversion + perf focus)
-      "multimodal_audio_match", "text_bpe_vocab")
-    def r3(v: Double): String = "%.3f".formatLocal(java.util.Locale.US, v)
-    val qs = results.filter(r => headline(r._1))
-      .map { case (k, v) => "\"" + k + "\":" + r3(v) }
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    val totalMin = if (results.nonEmpty) results.map(r => mins(r._1)).sum else 0.0
+    val result = measure(runs, passes)
     // local iteration aid: full per-query dump to a file, never stdout
     // (the driver-facing JSON line must stay the LAST thing printed)
     sys.env.get("SPARK_GRAFT_BENCH_FULL").foreach { path =>
-      val full = results.sortBy(-_._2)
+      val full = result.medians.sortBy(-_._2)
         .map { case (k, v) =>
-          "\"" + k + "\":{\"med\":" + r3(v) + ",\"min\":" + r3(mins(k)) + "}" }
+          "\"" + k + "\":{\"med\":" + r3(v) + ",\"min\":" +
+            r3(result.mins(k)) + "}" }
         .mkString("{", ",", "}")
       java.nio.file.Files.write(java.nio.file.Paths.get(path),
         full.getBytes("UTF-8"))
     }
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","stat":"median","passes":$passes,"value_min":${r3(totalMin)},"n_queries":${results.size},"queries":$qs,"sf":"$sfDir"}""")
+    println(jsonLine(result, passes, sfDir))
     spark.stop()
   }
 }

@@ -69,8 +69,10 @@ class SessionMemo[V](maxEntries: Int)(release: V => Unit) {
     while (it.hasNext) {
       val e = it.next()
       if (sessionStopped(e.getKey.session) && e.getValue.isDone) {
-        e.getValue.ifDone(release)
+        // unmap BEFORE releasing: a release that throws must not leave
+        // the dead entry mapped, or every later call would retry it
         it.remove()
+        e.getValue.ifDone(release)
       }
     }
   }
@@ -184,12 +186,15 @@ object SessionMemo {
     * when the plan root is the `LogicalRDD` that
     * `Dataset.localCheckpoint` returns (plain `unpersist` does not
     * reach those — they are RDD-level storage, not SQL cache entries).
+    * A no-op once the owning context is stopped: its blocks went with
+    * it, and `unpersist` on a stopped context throws.
     */
-  def free(df: DataFrame): Unit = {
-    df.unpersist(blocking = false)
-    df.queryExecution.logical match {
-      case l: LogicalRDD => l.rdd.unpersist(blocking = false)
-      case _ => ()
+  def free(df: DataFrame): Unit =
+    if (!df.sparkSession.sparkContext.isStopped) {
+      df.unpersist(blocking = false)
+      df.queryExecution.logical match {
+        case l: LogicalRDD => l.rdd.unpersist(blocking = false)
+        case _ => ()
+      }
     }
-  }
 }

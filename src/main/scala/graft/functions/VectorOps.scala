@@ -31,7 +31,7 @@ object VectorOps {
     * arithmetic, see [[org.apache.spark.sql.graftx.RoundAwayFromZero]]).
     * Spark's builtin round() allocates a BigDecimal per row and
     * measured 4x the cost of the 64-float dot it decorates on the
-    * 320M-candidate kNN join (TimeDot).
+    * 320M-candidate kNN join (TIMEONE.md, round 9).
     */
   def simRound6(c: Column): Column =
     org.apache.spark.sql.graftx.RoundAwayFromZero.column(c, 6)

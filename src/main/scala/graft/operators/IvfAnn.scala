@@ -30,7 +30,8 @@ object IvfAnn {
     * 100x rehearsal corpus (ids = base + range*1e7) it selected the
     * SAME 5 base vectors from every range, so 256 centroids trained on
     * 5 effective points, lists skewed ~4x fat, and the kNN join paid
-    * 320M candidate pairs where balanced lists cost ~80M (TimeKnn).
+    * 320M candidate pairs where balanced lists cost ~80M (TIMEONE.md,
+    * round 9).
     * `splitmix64(vec_id) % mod` is id-structure-independent, equally
     * deterministic, and — unlike Spark's builtin murmur hash — exactly
     * replayable by the DuckDB oracle, which makes the whole training

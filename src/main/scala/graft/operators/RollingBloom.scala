@@ -197,24 +197,35 @@ object RollingBloom {
     * pre-filter, which is correct, just unpruned.
     */
   def read(spark: SparkSession, dir: String,
-      excludeBatch: Option[Long] = None): Option[BloomFilter] = {
+      excludeBatch: Option[Long] = None): Option[BloomFilter] =
+    readKeyed(spark, dir, excludeBatch).map(_._2)
+
+  /** [[read]] with the snapshot's cache identity (path, mtime, length).
+    * A directory or snapshot that vanishes mid-read — a concurrent
+    * [[clear]] by a deep compaction, which rolls a fresh snapshot right
+    * after — reads as no bloom, the same unpruned-but-correct probe.
+    */
+  private def readKeyed(spark: SparkSession, dir: String,
+      excludeBatch: Option[Long])
+      : Option[((String, Long, Long), BloomFilter)] = {
     val d = new org.apache.hadoop.fs.Path(dir)
     val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(d)) return None
-    val usable = listSnaps(fs, d).filterNot {
-      case (true, id) => excludeBatch.contains(id)
-      case _ => false
-    }
-    if (usable.isEmpty) None
-    else {
-      val p = snapPath(dir, usable.max)
-      val st = fs.getFileStatus(p)
-      val key = (p.toString, st.getModificationTime, st.getLen)
-      Some(cache.computeIfAbsent(key, _ => {
-        val in = fs.open(p)
-        try BloomFilter.readFrom(in) finally in.close()
-      }))
-    }
+    try {
+      val usable = listSnaps(fs, d).filterNot {
+        case (true, id) => excludeBatch.contains(id)
+        case _ => false
+      }
+      if (usable.isEmpty) None
+      else {
+        val p = snapPath(dir, usable.max)
+        val st = fs.getFileStatus(p)
+        val key = (p.toString, st.getModificationTime, st.getLen)
+        Some(key -> cache.computeIfAbsent(key, _ => {
+          val in = fs.open(p)
+          try BloomFilter.readFrom(in) finally in.close()
+        }))
+      }
+    } catch { case _: java.io.FileNotFoundException => None }
   }
 
   private val bcastCache = new java.util.concurrent.ConcurrentHashMap[
@@ -233,18 +244,8 @@ object RollingBloom {
   def readBroadcast(spark: SparkSession, dir: String,
       excludeBatch: Option[Long] = None)
       : Option[org.apache.spark.broadcast.Broadcast[BloomFilter]] =
-    read(spark, dir, excludeBatch).map { bf =>
-      // recompute the cache identity the way read() did (cheap: one
-      // listing + one stat, both already just done and OS-cached)
-      val d = new org.apache.hadoop.fs.Path(dir)
-      val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val usable = listSnaps(fs, d).filterNot {
-        case (true, id) => excludeBatch.contains(id)
-        case _ => false
-      }
-      val p = snapPath(dir, usable.max)
-      val st = fs.getFileStatus(p)
-      val key = (p.toString, st.getModificationTime, st.getLen, excludeBatch)
+    readKeyed(spark, dir, excludeBatch).map { case ((path, mtime, len), bf) =>
+      val key = (path, mtime, len, excludeBatch)
       bcastCache.compute(dir, (_, cur) =>
         if (cur != null && cur._1 == key) cur
         else {

@@ -1,21 +1,15 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: print the formatted physical plan of registered queries. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    // same session wiring as Bench/Verify (r15): the graftx extensions
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    // same session wiring as Bench/Verify: the graftx extensions
     // change plan shapes (TopKPerKey rewrites), so a plan dumped for
     // evidence must be the plan the bench actually runs
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new org.apache.spark.sql.graftx.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session(master = s"local[$cpus]",
+      shufflePartitions = cpus)
     spark.sparkContext.setLogLevel("ERROR")
     args.foreach { name =>
       println(s"\n================ $name ================")

@@ -137,7 +137,8 @@ object TopKPerKeyRewrite extends Rule[LogicalPlan] {
   * strategy and the window-top-k rewrite engine-wide.
   *
   *   spark.sql.extensions=org.apache.spark.sql.graftx.GraftExtensions
-  * or SparkSession.builder().withExtensions(new GraftExtensions)
+  * or `.withExtensions(new GraftExtensions)` on a session builder
+  * (what `graft.Graft.session` does)
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

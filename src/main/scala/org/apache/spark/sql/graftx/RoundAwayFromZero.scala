@@ -17,11 +17,12 @@ import org.apache.spark.sql.types.{AbstractDataType, DataType, DoubleType}
   * routes EVERY row through `BigDecimal.valueOf(x).setScale(...)` —
   * an allocation plus decimal-string arithmetic. On the ANN kNN-join's
   * 320M-candidate fan-out that "cosmetic" rounding measured 112 s
-  * where the 64-float dot product it decorates costs 28 s (TimeDot,
-  * local[4], 100x corpus). This expression stays in primitive doubles
-  * inside whole-stage codegen, and is exactly the arithmetic the
-  * DuckDB oracle performs — so cross-engine sim parity is by
-  * construction, not by hoping two different decimal paths agree.
+  * where the 64-float dot product it decorates costs 28 s (TIMEONE.md
+  * round 9, local[4], 100x corpus). This expression stays in
+  * primitive doubles inside whole-stage codegen, and is exactly the
+  * arithmetic the DuckDB oracle performs — so cross-engine sim parity
+  * is by construction, not by hoping two different decimal paths
+  * agree.
   *
   * The half test is exact, not the `floor(s + 0.5)` trick: `s -
   * floor(s)` is exact in IEEE 754 for every finite double, while

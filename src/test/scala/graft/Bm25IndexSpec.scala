@@ -240,7 +240,7 @@ class Bm25IndexSpec extends SparkSpec {
       def rowsRead(): (Long, Long) = {
         val kept = Bm25Index.notYetIngested(probe, "doc_id", p)
         assert(kept.count() == 1L, "exactly the unseen doc must survive")
-        val read = graft.tools.PlanShape.flat(
+        val read = PlanShape.flat(
             kept.queryExecution.executedPlan)
           .collect { case s: org.apache.spark.sql.execution.FileSourceScanExec
             if s.metadata.getOrElse("Location", "").contains("docids") =>

@@ -33,7 +33,7 @@ class IncrementalIndexSpec extends SparkSpec {
 
   private def scans(df: DataFrame): Seq[FileSourceScanExec] = {
     df.collect()
-    graft.tools.PlanShape.flat(df.queryExecution.executedPlan)
+    PlanShape.flat(df.queryExecution.executedPlan)
       .collect { case s: FileSourceScanExec => s }
   }
 
@@ -159,7 +159,7 @@ class IncrementalIndexSpec extends SparkSpec {
           .localCheckpoint(true)
         val cand = Dedup.indexCandidates(spark, dir, bb, meta, None)
         assert(cand.collect().length >= 1)
-        val read = graft.tools.PlanShape.flat(
+        val read = PlanShape.flat(
             cand.queryExecution.executedPlan)
           .collect { case s: FileSourceScanExec
             if s.metadata.getOrElse("Location", "").contains("bands") =>
@@ -210,7 +210,7 @@ class IncrementalIndexSpec extends SparkSpec {
         val cand = Dedup.indexCandidates(spark, dir, bb, meta, None)
         val n = cand.collect().length
         assert(n >= 1, "the planted near-dup must surface as a candidate")
-        val read = graft.tools.PlanShape.flat(cand.queryExecution.executedPlan)
+        val read = PlanShape.flat(cand.queryExecution.executedPlan)
           .collect { case s: FileSourceScanExec
             if s.metadata.getOrElse("Location", "").contains("bands") =>
               s.metrics("numOutputRows").value }.sum
@@ -257,7 +257,7 @@ class IncrementalIndexSpec extends SparkSpec {
     def run() = Dedup.dedupAgainstIndex(batch, "doc_id", "text", dir, 0.5)
     def broadcastsSha(df: DataFrame): Boolean = {
       df.collect()
-      graft.tools.PlanShape.flat(df.queryExecution.executedPlan).exists {
+      PlanShape.flat(df.queryExecution.executedPlan).exists {
         case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeLike =>
           b.schema.fieldNames.contains("sha")
         case _ => false

@@ -1,15 +1,15 @@
-package graft.tools
+package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ReusedExchangeExec, ShuffleExchangeLike}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
 
-/** Executed-plan shape accounting, shared by the PlanShape dev tool
-  * and PlanShapeSpec's strategy-drift pins: counts the plan features
-  * that distinguish a scale-safe strategy from a regressed one —
-  * exchange counts (every shuffle is a full network pass over the
+/** Executed-plan shape accounting for PlanShapeSpec's strategy-drift
+  * pins and the specs that inspect executed plans: counts the plan
+  * features that distinguish a scale-safe strategy from a regressed
+  * one — exchange counts (every shuffle is a full network pass over the
   * data at 100 TB) and join strategies (which side broadcasts, and
   * whether a join degraded from broadcast/hash to an extra exchange).
   * Counted on the FINAL adaptive plan, after AQE has re-planned with
@@ -62,25 +62,5 @@ object PlanShape {
         case _: ShuffledHashJoinExec => true; case _ => false },
       broadcastNestedLoops = nodes.count {
         case _: BroadcastNestedLoopJoinExec => true; case _ => false })
-  }
-
-  /** Dev utility: print the executed shape of registered queries.
-    * Usage: PlanShape <name1,name2,...> [sfDir]
-    */
-  def main(args: Array[String]): Unit = {
-    val names = args(0).split(',').toSeq
-    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    names.foreach { n =>
-      val s = of(graft.SparkEntry.queries(n)(spark, sfDir))
-      println(s"SHAPE $n $s")
-    }
-    spark.stop()
   }
 }

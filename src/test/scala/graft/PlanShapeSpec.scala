@@ -1,7 +1,6 @@
 package graft
 
-import graft.tools.PlanShape
-import graft.tools.PlanShape.Shape
+import PlanShape.Shape
 
 /** Executed-plan-shape pins for the five most expensive registered
   * queries (bench_full_r7 top-5). The registry-wide guards
@@ -15,9 +14,13 @@ import graft.tools.PlanShape.Shape
   *
   * The pins are SF-specific (AQE picks strategies from runtime sizes,
   * so the committed sf0.001 inputs make them deterministic); a pin
-  * failure after an intentional strategy change is expected — re-read
-  * the new plan, confirm it is still the plan you'd want at 100 TB,
-  * and re-pin with `runMain graft.tools.PlanShape <names> <sfDir>`.
+  * failure after an intentional strategy change is expected. Re-pin
+  * from the failure message, which prints the executed shape
+  * (`executed Shape(...)`) from this suite's own local[4] + graftx
+  * session: re-read that plan (`runMain graft.tools.Explain <name>`
+  * with `SPARK_GRAFT_SF_DIR` set to the pinned sf), confirm it is
+  * still the plan you'd want at 100 TB, and copy the printed shape
+  * into `pins`.
   */
 class PlanShapeSpec extends SparkSpec {
 

@@ -259,7 +259,7 @@ class RunManifestSpec extends SparkSpec {
           .localCheckpoint(true)
         val cand = Dedup.indexCandidates(spark, root, bb, meta, None)
         assert(cand.collect().nonEmpty, "planted dup must surface")
-        val read = graft.tools.PlanShape.flat(
+        val read = PlanShape.flat(
             cand.queryExecution.executedPlan)
           .collect { case s: FileSourceScanExec
             if s.metadata.getOrElse("Location", "").contains("bands") =>

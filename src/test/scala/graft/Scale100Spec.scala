@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * verdict task 5: 10x was the ceiling, and the r5 audio cliff only
   * appeared AT 10x, so the next decade matters).
   *
-  * Corpus: [[graft.tools.Time100.docs100]] — 10 disjoint token-renamed
+  * Corpus: [[ScaleCorpus.docs100]] — 10 disjoint token-renamed
   * SHARDS of the 10x docs10 fixture (50 000 docs). Near-dup density
   * stays constant (10-replica groups); a naive 100x replication would
   * instead grow every near-dup group to 100 members and the pair graph
@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * renaming is a shingle-hash bijection per shard, so the 100x pair
   * COUNT must be exactly 10x the docs10 pair count.
   *
-  * Measured (Time100, local[32], 2026-08-14): graph build 9.0 s,
+  * Measured (local[32], 2026-08-14): graph build 9.0 s,
   * shuffled verify 0.2 s, containment 1.7 s, audio 50k 65 s with 50/50
   * planted twins. Bounds below are ~3x those numbers to absorb host
   * drift (TIMEONE.md documents 2-3x between windows).
@@ -30,7 +30,7 @@ class Scale100Spec extends SparkSpec {
   }
 
   test("shingle cascade at 100x: linear pairs, broadcast-off, bounded") {
-    val d100 = graft.tools.Time100.docs100(spark, "/root/testdata/sf0.01")
+    val d100 = ScaleCorpus.docs100(spark)
     assert(d100.count() == 50000L)
     // the scale plan end to end: blocking + minShared cut + SHUFFLED
     // verify (Some(false) — at a real sf1 the size gate would refuse
@@ -46,7 +46,7 @@ class Scale100Spec extends SparkSpec {
     // docs10 pair count; anything else means blocking recall drifted
     // with corpus size
     val docs10Pairs = graft.operators.Dedup.jaccardPairs(
-      graft.tools.Time100.docs10(spark, "/root/testdata/sf0.01"),
+      ScaleCorpus.docs10(spark),
       "doc_id", "text", threshold = 0.2, dfCap = 50, minShared = 2,
       verifyBroadcast = Some(false)).count()
     assert(nPairs == docs10Pairs * 10,
@@ -63,7 +63,7 @@ class Scale100Spec extends SparkSpec {
     // invariant is the one the operator owns: recall against the exact
     // >= 0.5 pair graph, plus bounded wall-clock on the shuffled-verify
     // plan.
-    val d100 = graft.tools.Time100.docs100(spark, "/root/testdata/sf0.01")
+    val d100 = ScaleCorpus.docs100(spark)
     val (lsh, t) = timed {
       graft.operators.Dedup.minhashLshPairs(d100, "doc_id", "text",
           threshold = 0.5, verifyBroadcast = Some(false))
@@ -106,8 +106,8 @@ class Scale100Spec extends SparkSpec {
     }
     val base = "/root/testdata/sf0.01"
     val (m10, tok10, _) = funnel(
-      graft.tools.Time100.pipelineShard(spark, base, 0).localCheckpoint(true))
-    val d100 = graft.tools.Time100.docs100Meta(spark, base)
+      ScaleCorpus.pipelineShard(spark, base, 0).localCheckpoint(true))
+    val d100 = ScaleCorpus.docs100Meta(spark, base)
     assert(d100.count() == 50000L)
     val ((m100, tok100, maxPack100), t) = timed(funnel(d100))
     info(s"100x pipeline funnel: $m100 tokens=$tok100 " +
@@ -149,8 +149,7 @@ class Scale100Spec extends SparkSpec {
     // months-of-ingest property at rehearsal scale
     import graft.pipeline.CorpusPipeline
     import graft.streaming.StreamingFunnel
-    val d100 = graft.tools.Time100
-      .docs100Meta(spark, "/root/testdata/sf0.01")
+    val d100 = ScaleCorpus.docs100Meta(spark)
     val cfg = CorpusPipeline.Config()
     val (batchOut, metrics) = CorpusPipeline.prepareObserved(d100, cfg)
     val expected = batchOut.select("doc_id").collect()
@@ -264,7 +263,7 @@ class Scale100Spec extends SparkSpec {
     // near-dups. The assertion is the lifecycle's whole point — probe
     // cost tracks the BATCH, not the corpus (bounded by the one-time
     // build), and every planted probe finds its source doc.
-    val d100 = graft.tools.Time100.docs100(spark, "/root/testdata/sf0.01")
+    val d100 = ScaleCorpus.docs100(spark)
     val idx = java.nio.file.Files
       .createTempDirectory("graft-100x-lsh").toString
     val (_, tBuild) = timed {

@@ -24,16 +24,8 @@ class ScaleRehearsalSpec extends SparkSpec {
 
   // 10x the sf0.01 corpus: replicas keep near-dup structure (slightly
   // perturbed text) and unique ids in disjoint ranges
-  private lazy val docs10: DataFrame = {
-    val base = Tables(spark, "/root/testdata/sf0.01", "documents")
-      .select("doc_id", "text")
-    val reps = (0 until 10).map { r =>
-      base.select(
-        (col("doc_id") + lit(r * 10000000L)).as("doc_id"),
-        concat(col("text"), lit(s" replica$r")).as("text"))
-    }
-    reps.reduce(_ unionByName _).localCheckpoint(true)
-  }
+  private lazy val docs10: DataFrame =
+    ScaleCorpus.docs10(spark).localCheckpoint(true)
 
   private def timed[A](f: => A): (A, Double) = {
     val t0 = System.nanoTime()

@@ -294,6 +294,26 @@ class SessionMemoSpec extends SparkSpec {
     assert(memo.size == 0)
   }
 
+  test("a stopped session's entry is purged even when its release throws") {
+    // unpersist on a stopped context throws (as the release does here);
+    // the purge used to release BEFORE unmapping, so the dead entry
+    // stayed mapped and every later call into the memo threw again
+    @volatile var dead: SparkSession = null
+    val memo = new SessionMemo[String](4)(v =>
+      throw new IllegalStateException(s"release of $v: context stopped")) {
+      override protected def sessionStopped(s: SparkSession): Boolean =
+        s eq dead
+    }
+    val old = spark.newSession()
+    memo.getOrElseUpdate(old, "dir")("stale")
+    dead = old
+    intercept[IllegalStateException](memo.purgeDead())
+    assert(memo.size == 0, "the dead entry must be gone after the purge")
+    assert(memo.getOrElseUpdate(spark, "dir")("fresh") == "fresh",
+      "the next caller must compute a fresh value")
+    assert(memo.size == 1)
+  }
+
   test("a different session never sees another session's entry") {
     val memo = new SessionMemo[String](4)(_ => ())
     val v1 = memo.getOrElseUpdate(spark, "dir")("from-session-1")
