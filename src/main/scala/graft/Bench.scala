@@ -95,11 +95,13 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
+    // the level must be set before the context starts: set after,
+    // Spark's start-up INFO lines bury the failure lines on stderr
+    sys.props.getOrElseUpdate("spark.log.level", "WARN")
     // same session wiring as Verify: graftx extensions on by default
     // so benched plans are the plans a library user gets
     val spark = Graft.session(master = s"local[$cpus]",
       shufflePartitions = cpus)
-    spark.sparkContext.setLogLevel("WARN")
     val warmupDir = "/root/testdata/sf0.001"
     val named = SparkEntry.queries.toSeq.sortBy(_._1)
     named.foreach { case (_, fn) =>

@@ -9,12 +9,14 @@ object Verify {
     // iteration); no extra args = dump everything (driver contract)
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    // the level must be set before the context starts: set after,
+    // Spark's start-up INFO lines bury the failure lines on stderr
+    sys.props.getOrElseUpdate("spark.log.level", "WARN")
     // session-default graftx extensions (optimizer rewrite + native
     // strategy + SQL functions): any row_number-top-k in the registry
     // gets the bounded-heap plan without a per-call opt-in
     val spark = Graft.session(master = s"local[$cpus]",
       shufflePartitions = cpus)
-    spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

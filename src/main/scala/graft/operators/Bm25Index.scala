@@ -45,13 +45,19 @@ object Bm25Index {
   // one row per doc BEFORE the explode — docs that tokenize to zero
   // tokens keep their row, so index stats count them exactly like the
   // ad-hoc bm25TopK does (r3 advisor: the two paths share one oracle)
+  // every consumer shares one tokenize pass (the checkpoint), whose
+  // materialization also counts the docs (an observed metric)
   private def tokenizedDocs(docs: DataFrame, idCol: String,
-      textCol: String): DataFrame =
-    docs
+      textCol: String): (DataFrame, Long) = {
+    val obs = org.apache.spark.sql.Observation()
+    val toks = docs
       .select(col(idCol).as("doc_id"), TextOps.tokens(col(textCol)).as("ws"))
       .select(col("doc_id"), size(col("ws")).cast("double").as("dl"),
         col("ws"))
-      .localCheckpoint(true) // every consumer shares one tokenize pass
+      .observe(obs, count(lit(1)).as("n"))
+      .localCheckpoint(true)
+    (toks, obs.get("n").asInstanceOf[Long])
+  }
 
   // stats are stored MERGEABLE — (n_docs, sum_dl), never a pre-divided
   // average — so appends add partials instead of rebuilding; avgdl is
@@ -170,7 +176,7 @@ object Bm25Index {
       path: String): Unit = {
     val spark = docs.sparkSession
     val root = rootOf(spark, path)
-    val toks = tokenizedDocs(docs, idCol, textCol)
+    val (toks, _) = tokenizedDocs(docs, idCol, textCol)
     writeDerived(toks, root, "overwrite")
     val prefixes = Dedup.lshPrefixesFor(docs)
     writeDocPrefixes(spark, root, prefixes)
@@ -295,15 +301,15 @@ object Bm25Index {
     }
     val batch = if (creation) docs
       else notYetIngested(docs, idCol, path, Some(batchId))
-    val toks = tokenizedDocs(batch, idCol, textCol)
+    val (toks, nDocs) = tokenizedDocs(batch, idCol, textCol)
     // an EMPTY effective batch (every row filtered upstream, or every
     // doc already ingested) must not write: on creation, a zero-row
     // write would leave a docids/ tree with no data files and the
     // NEXT batch's guard read dies on schema inference; appends
     // would just add empty partials. Skip entirely — a replay
     // recomputes empty and skips again, so idempotency holds. The
-    // check is a limit-1 job over the just-checkpointed tokens.
-    if (toks.isEmpty) return
+    // count rides the tokenize checkpoint (no job of its own).
+    if (nDocs == 0L) return
     writeDerived(toks, path, "overwrite", Some(batchId))
     val prefixes = readDocPrefixes(spark, path).getOrElse {
       val n = Dedup.lshPrefixesFor(docs)
@@ -338,7 +344,7 @@ object Bm25Index {
     val batch =
       if (!dedupeAgainstExisting || creation) docs
       else notYetIngested(docs, idCol, path)
-    val toks = tokenizedDocs(batch, idCol, textCol)
+    val (toks, _) = tokenizedDocs(batch, idCol, textCol)
     writeDerived(toks, path, "append")
     if (creation) {
       val n = Dedup.lshPrefixesFor(docs)

@@ -410,8 +410,8 @@ object Dedup {
   private def rollLshBloom(spark: org.apache.spark.sql.SparkSession,
       root: String, bandsPath: String, batch: Option[Long]): Unit =
     RollingBloom.roll(spark, s"$root/keybloom",
-      spark.read.parquet(bandsPath), "bkey", batch,
-      lshBloomCapacity(spark), lshBloomFpp(spark))
+      RunManifest.readParquet(spark, bandsPath, Seq(bandsPath)), "bkey",
+      batch, lshBloomCapacity(spark), lshBloomFpp(spark))
 
   /** Newest rolling key bloom, excluding the given batch's own
     * snapshot (replay safety). None = no bloom yet (legacy index or
@@ -1111,6 +1111,42 @@ object Dedup {
     * 8 x 8-bit bands (more candidates, the price of the wider radius).
     * Radii above 7 are rejected rather than silently under-recalled.
     */
+  /** Edges a driver-side union-find takes on (4M edges ≈ 64 MB — the
+    * same bounded-driver-state class as a broadcast threshold).
+    */
+  private val driverEdgeLimit = 4000000L
+
+  /** Driver-side union-find over long ids whose root is the component
+    * minimum — the small-graph path of [[connectedComponents]] and
+    * [[survivorsAgainstIndex]].
+    */
+  private final class MinUnionFind {
+    private val parent = scala.collection.mutable.Map.empty[Long, Long]
+
+    // iterative find with path halving: no recursion, so a 4M-edge
+    // pathological chain can't overflow the driver stack
+    def find(x0: Long): Long = {
+      var x = x0
+      var p = parent.getOrElseUpdate(x, x)
+      while (p != x) {
+        val gp = parent.getOrElseUpdate(p, p)
+        parent(x) = gp
+        x = gp
+        p = parent.getOrElseUpdate(x, x)
+      }
+      x
+    }
+
+    def union(a: Long, b: Long): Unit = {
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+
+    /** (node, component minimum) for every node seen. */
+    def labels: Seq[(Long, Long)] =
+      parent.keys.toSeq.map(k => (k, find(k)))
+  }
+
   /** Connected components over a near-dup pair graph by min-label
     * propagation: label(v) starts as v, each round takes the min over
     * the neighborhood, stops at fixpoint. Near-dup clusters have tiny
@@ -1129,7 +1165,7 @@ object Dedup {
     * same ground truth).
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 10,
-      maxDriverEdges: Long = 4000000L): DataFrame = {
+      maxDriverEdges: Long = driverEdgeLimit): DataFrame = {
     val spark0 = pairs.sparkSession
     // The driver fast path is gated on INTEGRAL, same-typed id columns:
     // the long cast is lossless there and the output is cast back, so
@@ -1149,27 +1185,10 @@ object Dedup {
       val nEdges = raw.count()
       if (nEdges <= maxDriverEdges) {
         import spark0.implicits._
-        val parent = scala.collection.mutable.Map.empty[Long, Long]
-        // iterative find with path halving: no recursion, so a 4M-edge
-        // pathological chain can't overflow the driver stack
-        def find(x0: Long): Long = {
-          var x = x0
-          var p = parent.getOrElseUpdate(x, x)
-          while (p != x) {
-            val gp = parent.getOrElseUpdate(p, p)
-            parent(x) = gp
-            x = gp
-            p = parent.getOrElseUpdate(x, x)
-          }
-          x
-        }
-        raw.collect().foreach { r =>
-          val (a, b) = (r.getLong(0), r.getLong(1))
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-        }
+        val uf = new MinUnionFind
+        raw.collect().foreach(r => uf.union(r.getLong(0), r.getLong(1)))
         raw.unpersist()
-        val labels = parent.keys.map(k => (k, find(k))).toSeq.sorted
+        val labels = uf.labels.sorted
         return labels.toDF("doc_id", "component")
           .select(col("doc_id").cast(idType.get).as("doc_id"),
             col("component").cast(idType.get).as("component"))
@@ -1414,9 +1433,24 @@ object Dedup {
     * election; in any order, no near-dup pair survives (spec-pinned
     * on scrambled shards). The streaming corpus funnel's near-dedup
     * stage is exactly this call.
+    *
+    * `maxEdges`: an upper bound on the edge count that the caller
+    * already knows (the funnel: n(n-1)/2 in-batch pairs for n exact
+    * survivors, plus the observed index-match count), -1 = unknown.
+    * Within [[driverEdgeLimit]] (integral ids) the election runs on the
+    * driver ([[survivorsOnDriver]]); otherwise through
+    * [[connectedComponents]] as before.
     */
   def survivorsAgainstIndex(docs: DataFrame, idCol: String,
-      batchPairs: DataFrame, idxPairs: DataFrame): DataFrame = {
+      batchPairs: DataFrame, idxPairs: DataFrame,
+      maxEdges: Long = -1L): DataFrame = {
+    import org.apache.spark.sql.types._
+    val integral = Set[DataType](ByteType, ShortType, IntegerType, LongType)
+    val integralIds = integral(docs.schema(idCol).dataType) &&
+      Seq(batchPairs, idxPairs).forall(p => Seq("ida", "idb")
+        .forall(c => integral(p.schema(c).dataType)))
+    if (maxEdges >= 0L && maxEdges <= driverEdgeLimit && integralIds)
+      return survivorsOnDriver(docs, idCol, batchPairs, idxPairs)
     // persist: three consumers (both loser branches + the anchor
     // join); free for the driver union-find's literal output, and
     // prevents a triple label-propagation run if a huge batch takes
@@ -1436,6 +1470,40 @@ object Dedup {
       .distinct()
       .withColumnRenamed("doc_id", idCol)
     docs.join(losers, Seq(idCol), "left_anti")
+  }
+
+  /** [[survivorsAgainstIndex]] for a graph the caller has bounded under
+    * [[driverEdgeLimit]]: the edges, tagged with their side, arrive in
+    * ONE collect (no persist, no count — the bound replaces both), the
+    * union-find, the anchors and the losers are driver work, and the
+    * losers leave `docs` in one anti-join against a local relation.
+    * Same election as the distributed path: every non-minimum member
+    * of a component loses, and so does every batch member of a
+    * component that holds an index doc.
+    */
+  private def survivorsOnDriver(docs: DataFrame, idCol: String,
+      batchPairs: DataFrame, idxPairs: DataFrame): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    def tagged(p: DataFrame, fromIndex: Boolean) = p.select(
+      col("ida").cast("long").as("u"), col("idb").cast("long").as("v"),
+      lit(fromIndex).as("idx"))
+    val edges = tagged(batchPairs, fromIndex = false)
+      .unionByName(tagged(idxPairs, fromIndex = true))
+      .where(col("u").isNotNull && col("v").isNotNull)
+      .collect()
+    val uf = new MinUnionFind
+    edges.foreach(r => uf.union(r.getLong(0), r.getLong(1)))
+    // idx edges are (batch doc, index doc): the index side anchors
+    val anchored = edges.iterator.filter(_.getBoolean(2))
+      .map(r => uf.find(r.getLong(1))).toSet
+    val losers = uf.labels.collect {
+      case (id, root) if id != root || anchored(root) => id
+    }.sorted
+    docs.join(
+      losers.toDF("_l").select(
+        col("_l").cast(docs.schema(idCol).dataType).as(idCol)),
+      Seq(idCol), "left_anti")
   }
 
   def simhashPairs(docs: DataFrame, idCol: String, textCol: String,

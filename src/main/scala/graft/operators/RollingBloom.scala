@@ -1,6 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.sql.graftx.BloomAgg
 import org.apache.spark.util.sketch.BloomFilter
 
 /** Rolling, mergeable bloom snapshots over a persisted index's key
@@ -33,8 +35,22 @@ import org.apache.spark.util.sketch.BloomFilter
   */
 object RollingBloom {
 
+  /** Loaded snapshots: ONE per bloom directory, keyed by the
+    * directory and tagged with the snapshot identity (path, mtime,
+    * length) — a read of any other snapshot of that directory (in
+    * practice the next, newer one) replaces the entry. Keyed by
+    * snapshot alone, the cache kept every batch's bitmap of every
+    * index for the life of the JVM; after a compaction re-sizes a
+    * bloom to the corpus, each of those can be hundreds of MB.
+    */
   private val cache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long), BloomFilter]()
+    String, ((String, Long, Long), BloomFilter)]()
+
+  /** Snapshot paths currently held by the read cache. */
+  private[graft] def cachedSnapshots: Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    cache.values().asScala.map(_._1._1).toSeq
+  }
 
   /** Base generations older than the newest this many are pruned
     * best-effort after a successful base roll (each roll merges all
@@ -125,23 +141,35 @@ object RollingBloom {
       fpp: Double): Unit = {
     val d = new org.apache.hadoop.fs.Path(dir)
     val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // stat.bloomFilter NPEs on zero rows (null agg buffer), and
+    // the bloom aggregate yields null over zero rows, and
     // sketch.BloomFilter.create builds a geometry incompatible with
-    // the stat aggregate's V2 impl — so an EMPTY batch (e.g. a
+    // the aggregate's V2 impl — so an EMPTY batch (e.g. a
     // micro-batch fully dropped by upstream filters) re-writes the
     // previous snapshot unchanged (keeps the snapshot-per-batch
     // lifecycle monotone) or, with no history either, rolls nothing
     val prev = read(spark, dir, excludeBatch = batch)
-    lazy val (cap, f) = readMeta(spark, dir).getOrElse {
+    val (cap, f) = readMeta(spark, dir).getOrElse {
       if (capacity > 0) (capacity, fpp)
       // meta-less with history = a pre-meta directory: its snapshots
       // were built at the legacy fixed default, and auto-sizing here
       // would make the merge geometry-incompatible
       else if (prev.isDefined) (legacyCapacity, fpp)
-      else (math.max(65536L, 16L * keys.count()), fpp)
+      else {
+        val n = keys.count()
+        // empty first roll: nothing to merge and no history either
+        if (n == 0L) return
+        (math.max(65536L, 16L * n), fpp)
+      }
     }
+    // ONE aggregation gives the key count and the batch bloom — the
+    // same `bloom_filter_agg` that `keys.stat.bloomFilter(keyCol, cap,
+    // f)` runs, so the bits are identical, without the separate
+    // emptiness job per roll
+    val agg = keys.agg(count(lit(1)),
+      BloomAgg.column(col(keyCol), cap,
+        BloomFilter.optimalNumOfBits(cap, f))).collect()(0)
     val merged =
-      if (keys.isEmpty) prev match {
+      if (agg.getLong(0) == 0L) prev match {
         case Some(b) => b
         case None => return
       } else {
@@ -150,7 +178,7 @@ object RollingBloom {
         // every later reader of the older snapshot (weaker pruning — a
         // bloom can only over-approximate — but a shared-cache
         // mutation trap all the same)
-        val batchBloom = keys.stat.bloomFilter(keyCol, cap, f)
+        val batchBloom = BloomFilter.readFrom(agg.getAs[Array[Byte]](1))
         prev.foreach(batchBloom.mergeInPlace)
         batchBloom
       }
@@ -220,10 +248,12 @@ object RollingBloom {
         val p = snapPath(dir, usable.max)
         val st = fs.getFileStatus(p)
         val key = (p.toString, st.getModificationTime, st.getLen)
-        Some(key -> cache.computeIfAbsent(key, _ => {
-          val in = fs.open(p)
-          try BloomFilter.readFrom(in) finally in.close()
-        }))
+        Some(cache.compute(dir, (_, cur) =>
+          if (cur != null && cur._1 == key) cur
+          else {
+            val in = fs.open(p)
+            try key -> BloomFilter.readFrom(in) finally in.close()
+          }))
       }
     } catch { case _: java.io.FileNotFoundException => None }
   }

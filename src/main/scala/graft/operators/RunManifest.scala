@@ -2,9 +2,15 @@ package graft.operators
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.hadoop.fs.Path
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Tiered-run lifecycle for the persisted streaming indexes — the
   * maintenance model that stays affordable at 100 TB.
@@ -307,9 +313,72 @@ object RunManifest {
     */
   def readRuns(spark: SparkSession, root: String, table: String,
       runs: Seq[Run]): DataFrame =
-    spark.read
-      .option("basePath", if (table.isEmpty) root else s"$root/$table")
-      .parquet(runs.map(r => runPath(root, table, r.id)): _*)
+    readParquet(spark, if (table.isEmpty) root else s"$root/$table",
+      runs.map(r => runPath(root, table, r.id)))
+
+  /** `spark.read.parquet(paths)` under `basePath` WITHOUT the schema
+    * inference job: every parquet file Spark writes carries its row
+    * schema in the footer (`org.apache.spark.sql.parquet.row.metadata`,
+    * the schema inference itself prefers), so the driver reads it from
+    * the first data file and passes it as the data schema. Partition
+    * columns stay out of it and are discovered from the directories
+    * as before, so the frame's columns, their order, types and
+    * nullability are what inference gives. A footer without that
+    * schema, or no data file at all, falls back to inference.
+    */
+  def readParquet(spark: SparkSession, basePath: String,
+      paths: Seq[String]): DataFrame = {
+    val r = spark.read.option("basePath", basePath)
+    footerSchema(spark, basePath, paths).fold(r)(r.schema)
+      .parquet(paths: _*)
+  }
+
+  private val sparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** The last footer schema read per base path, tagged with its file's
+    * identity (path, length, mtime): a rewritten file is read afresh,
+    * and the memo holds one entry per index table.
+    */
+  private val footerSchemas = new ConcurrentHashMap[String,
+    ((String, Long, Long), Option[StructType])]()
+
+  private def footerSchema(spark: SparkSession, basePath: String,
+      paths: Seq[String]): Option[StructType] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    def visible(st: FileStatus): Boolean = {
+      val n = st.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
+    }
+    // the first data file, depth first through partition directories
+    def firstFile(fs: FileSystem, d: Path): Option[FileStatus] = {
+      val (files, dirs) = fs.listStatus(d).filter(visible)
+        .sortBy(_.getPath.getName).partition(_.isFile)
+      files.find(_.getPath.getName.endsWith(".parquet"))
+        .orElse(dirs.iterator.flatMap(s => firstFile(fs, s.getPath))
+          .nextOption())
+    }
+    val file = paths.iterator.map(new Path(_)).flatMap { p =>
+      val fs = fsOf(spark, p)
+      try firstFile(fs, p).iterator
+      catch { case _: java.io.FileNotFoundException => Iterator.empty }
+    }.nextOption()
+    file.flatMap { st =>
+      val key = (st.getPath.toString, st.getLen, st.getModificationTime)
+      footerSchemas.compute(basePath, (_, cur) =>
+        if (cur != null && cur._1 == key) cur
+        else key -> readFooterSchema(conf, st))._2
+    }
+  }
+
+  private def readFooterSchema(conf: Configuration,
+      st: FileStatus): Option[StructType] =
+    try {
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+      val json = try reader.getFooter.getFileMetaData.getKeyValueMetaData
+          .get(sparkSchemaKey)
+        finally reader.close()
+      Option(json).map(DataType.fromJson).collect { case t: StructType => t }
+    } catch { case NonFatal(_) => None }
 
   def modulusGroups(runs: Seq[Run]): Seq[(Option[Int], Seq[Run])] =
     runs.groupBy(_.prefixes).toSeq.sortBy(_._1.getOrElse(0))

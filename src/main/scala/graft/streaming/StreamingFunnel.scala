@@ -44,6 +44,19 @@ import graft.pipeline.CorpusPipeline
   * latency therefore tracks the batch, not total ingested volume —
   * StreamingFunnelSpec pins both that and result parity.
   *
+  * Per-batch job budget: a micro-batch of a few hundred docs costs what
+  * its Spark jobs cost (scheduling, AQE stage materialization, code
+  * generation), not what its data costs, so the job count is pinned:
+  * at most 55 jobs per batch (two batches into a fresh index: 42 and
+  * 51 measured), 6 per BM25 probe and 15 per tiered [[maintain]] cycle
+  * — FunnelJobBudgetSpec, whose ceilings only ever go down. Counts the
+  * batch already holds replace dedicated jobs: nExact and the
+  * index-match count ride their checkpoints and bound the near-dup
+  * graph, so a batch-sized graph is elected on the driver
+  * ([[Dedup.survivorsAgainstIndex]]); index runs open from their
+  * footer schema ([[RunManifest.readParquet]]); a bloom roll is one
+  * aggregation ([[RollingBloom.roll]]).
+  *
   * Idempotency (foreachBatch is at-least-once): every write this
   * funnel makes is an OVERWRITE of a `batch=<id>` subtree — hash
   * index, LSH index ([[Dedup.appendToLshIndex]]'s `subdir`),
@@ -109,8 +122,14 @@ object StreamingFunnel {
     // is fully materialized before the method returns (stats scalars +
     // parquet writes), so nothing lazy escapes the cleanup.
     val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+    // the batch's async index writes read its checkpoints: on a throw,
+    // the writes not yet started are skipped and the running ones are
+    // joined BEFORE the cleanup below drops what they read — and before
+    // a replay of this batch can write the same batch=<id> runs
+    val writes = new IndexWrites(spark)
     try processBatchInner(batch, batchId, cfg, indexDir, survivorsDir,
-      bm25Dir, t0)
+      bm25Dir, t0, writes)
+    catch { case t: Throwable => writes.abort(t); throw t }
     finally {
       val after = spark.sparkContext.getPersistentRDDs
       (after.keySet -- rddsBefore).foreach(id =>
@@ -120,7 +139,7 @@ object StreamingFunnel {
 
   private def processBatchInner(batch: DataFrame, batchId: Long,
       cfg: CorpusPipeline.Config, indexDir: String, survivorsDir: String,
-      bm25Dir: Option[String], t0: Long): BatchStats = {
+      bm25Dir: Option[String], t0: Long, writes: IndexWrites): BatchStats = {
     val spark = batch.sparkSession
     import spark.implicits._
 
@@ -256,12 +275,11 @@ object StreamingFunnel {
     // the hash-index write shares no state with the near-dedup stages
     // below — overlap them (guide §2.6): submit it to the write pool
     // and join before the batch commits
-    val hashWrite =
-      if (nExact > 0L) Some(submitIndexWrite(spark,
-        s"funnel: hash-index write batch=$batchId") {
+    if (nExact > 0L)
+      writes.submit(s"funnel: hash-index write batch=$batchId") {
         writeHashBatch(exact.select("_h"), indexDir, batchId,
           skipEmptyCheck = true)
-      }) else None
+      }
     val docs = exact.drop("_h")
 
     // near dedup: index-match pairs UNION the in-batch pair graph, one
@@ -290,14 +308,17 @@ object StreamingFunnel {
     val inBatchPairs = Dedup
       .minhashLshPairsShingled(sh, cfg.dedupThreshold)
       .select("ida", "idb")
-    val idxPairs =
+    val idxObs = org.apache.spark.sql.Observation()
+    val (idxPairs, nIdxPairs) =
       if (exists(spark,
-          s"${IndexLifecycle.resolveRoot(spark, lshDir)}/bands"))
-        Dedup.dedupAgainstIndexShingled(sh, lshDir,
+          s"${IndexLifecycle.resolveRoot(spark, lshDir)}/bands")) {
+        val pairs = Dedup.dedupAgainstIndexShingled(sh, lshDir,
             cfg.dedupThreshold, excludeBatch = Some(batchId))
           .select(col("batch_id").as("ida"), col("corpus_id").as("idb"))
+          .observe(idxObs, count(lit(1)).as("n"))
           .localCheckpoint(true) // feeds both the edge set and the anchors
-      else spark.emptyDataset[(Long, Long)].toDF("ida", "idb")
+        (pairs, idxObs.get("n").asInstanceOf[Long])
+      } else (spark.emptyDataset[(Long, Long)].toDF("ida", "idb"), 0L)
     // ALL exact-surviving docs enter the index (survivors-only appends
     // would blind later batches to dropped members' neighbors), into
     // this batch's own overwrite-on-replay subtree; nExact gates the
@@ -307,14 +328,20 @@ object StreamingFunnel {
     // append (a writer to the same lsh root) cannot race them — to
     // overlap the survivor election and the batch's sinks below
     // (guide §2.6); joined before the batch commits
-    val lshAppend =
-      if (nExact > 0L) Some(submitIndexWrite(spark,
-        s"funnel: lsh-index append batch=$batchId") {
+    if (nExact > 0L)
+      writes.submit(s"funnel: lsh-index append batch=$batchId") {
         Dedup.appendShingledToLshIndex(sh, lshDir, subdir = Some(batchId))
-      }) else None
+      }
+    // the edge bound comes from counts already in hand — the in-batch
+    // pairs are distinct (ida < idb) pairs of the nExact docs — so a
+    // batch-sized graph is elected on the driver without a count job
+    // over the edges (Dedup.survivorsAgainstIndex)
+    val maxEdges = (BigInt(nExact) * (nExact - 1) / 2 + nIdxPairs)
+      .min(BigInt(Long.MaxValue)).toLong
     val nearObs = org.apache.spark.sql.Observation()
     val survivors = Dedup
-      .survivorsAgainstIndex(docs, "doc_id", inBatchPairs, idxPairs)
+      .survivorsAgainstIndex(docs, "doc_id", inBatchPairs, idxPairs,
+        maxEdges)
       .observe(nearObs, count(lit(1)).as("n"))
       .localCheckpoint(true)
     // same discipline as nExact: the survivor count rides the eager
@@ -333,7 +360,7 @@ object StreamingFunnel {
     RunManifest.addRun(spark, ingestDir, Seq(""), batchId, None)
     // a failed async index write must fail the trigger (the replay
     // recomputes and overwrites), never be swallowed by the pool
-    awaitIndexWrites(hashWrite.toSeq ++ lshAppend.toSeq)
+    writes.await()
     BatchStats(batchId, nInput, nLang, nQuality, nExact, nNear,
       (System.nanoTime() - t0) / 1000000, nOutOfOrder)
   }
@@ -341,8 +368,8 @@ object StreamingFunnel {
   /** The pool behind the batch's two nExact-gated index writes (hash
     * run + LSH append): both are independent of the near-dedup stages
     * they overlap and of each other, so the only constraint is the
-    * join before the trigger commits ([[awaitIndexWrites]]). Two
-    * threads — exactly the two writes a batch can have in flight.
+    * join before the trigger commits ([[IndexWrites]]). Two threads —
+    * exactly the two writes a batch can have in flight.
     */
   private lazy val indexWritePool =
     java.util.concurrent.Executors.newFixedThreadPool(2, r => {
@@ -351,29 +378,57 @@ object StreamingFunnel {
       t
     })
 
-  /** Submit one independent index write (guide §2.6 — the scheduler
-    * happily runs several jobs at once; actions are only sequential
-    * because driver code calls them sequentially). Job descriptions
-    * are thread-local, so the label tags exactly this write's jobs.
+  /** One batch's writes on [[indexWritePool]] (guide §2.6 — the
+    * scheduler happily runs several jobs at once; actions are only
+    * sequential because driver code calls them sequentially). Every
+    * submitted write is joined on every path: [[await]] when the batch
+    * commits, [[abort]] when it throws.
     */
-  private def submitIndexWrite(spark: org.apache.spark.sql.SparkSession,
-      desc: String)(work: => Unit): java.util.concurrent.Future[_] =
-    indexWritePool.submit(new Runnable {
-      def run(): Unit = {
-        spark.sparkContext.setJobDescription(desc)
-        try work finally spark.sparkContext.setJobDescription(null)
-      }
-    })
+  private final class IndexWrites(spark: org.apache.spark.sql.SparkSession) {
+    private val aborted = new java.util.concurrent.atomic.AtomicBoolean
+    private val futures =
+      scala.collection.mutable.ArrayBuffer.empty[java.util.concurrent.Future[_]]
 
-  private def awaitIndexWrites(
-      writes: Seq[java.util.concurrent.Future[_]]): Unit =
-    writes.foreach { f =>
+    /** Job descriptions are thread-local, so the label tags exactly
+      * this write's jobs. A write still queued when the batch aborts
+      * never starts.
+      */
+    def submit(desc: String)(work: => Unit): Unit =
+      futures += indexWritePool.submit(new Runnable {
+        def run(): Unit = if (!aborted.get) {
+          spark.sparkContext.setJobDescription(desc)
+          try work finally spark.sparkContext.setJobDescription(null)
+        }
+      })
+
+    /** Wait for every write; the first failure fails the batch. */
+    def await(): Unit = futures.foreach { f =>
       try f.get()
       catch {
-        case e: java.util.concurrent.ExecutionException =>
-          throw e.getCause
+        case e: java.util.concurrent.ExecutionException => throw e.getCause
       }
     }
+
+    /** The batch failed with `cause`: skip the writes not yet started,
+      * wait for the running ones, and attach their own failures to
+      * `cause`.
+      */
+    def abort(cause: Throwable): Unit = {
+      aborted.set(true)
+      val it = futures.iterator
+      var interrupted = false
+      while (it.hasNext && !interrupted)
+        try it.next().get()
+        catch {
+          case e: java.util.concurrent.ExecutionException =>
+            if (e.getCause ne cause) cause.addSuppressed(e.getCause)
+          case _: InterruptedException =>
+            // the stream is stopping: stop waiting, keep the flag
+            interrupted = true
+            Thread.currentThread().interrupt()
+        }
+    }
+  }
 
   /** Expected distinct documents for the hash index's rolling bloom —
     * `spark.graft.hash.bloomCapacity`, default AUTO (-1): the first

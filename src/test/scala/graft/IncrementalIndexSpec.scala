@@ -405,6 +405,37 @@ class IncrementalIndexSpec extends SparkSpec {
     assert(kept2 == Set(1L, 2L, 4L))
   }
 
+  test("survivorsAgainstIndex: driver election == distributed election") {
+    // the funnel bounds a batch's edge count and elects on the driver;
+    // the same graph through the distributed path must keep the same
+    // docs (random graph: chains, anchored and local components)
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val ids = 1 to 200
+    val batch = ids.map(i => (i, s"d$i")).toDF("doc_id", "text")
+    val batchPairs = Seq.fill(150) {
+      val (a, b) = (1 + rnd.nextInt(200), 1 + rnd.nextInt(200))
+      (math.min(a, b), math.max(a, b))
+    }.filter { case (a, b) => a != b }.distinct.toDF("ida", "idb")
+    val idxPairs = Seq.fill(20)((1 + rnd.nextInt(200), 1000 + rnd.nextInt(50)))
+      .distinct.toDF("ida", "idb")
+    def kept(maxEdges: Long) = Dedup.survivorsAgainstIndex(batch, "doc_id",
+        batchPairs, idxPairs, maxEdges)
+      .select("doc_id").collect().map(_.getInt(0)).toSet
+    val onDriver = kept(200L * 199 / 2 + 20)
+    val distributed = kept(-1L)
+    assert(onDriver == distributed)
+    assert(onDriver.size > 20 && onDriver.size < 180,
+      s"fixture drift: ${onDriver.size} of 200 kept")
+    // the small contract above holds on the driver path too
+    val small = Seq(1L, 2L, 3L, 4L, 5L).map(i => (i, s"d$i"))
+      .toDF("doc_id", "text")
+    assert(Dedup.survivorsAgainstIndex(small, "doc_id",
+        Seq((2L, 3L), (4L, 5L)).toDF("ida", "idb"),
+        Seq((5L, 900L)).toDF("ida", "idb"), maxEdges = 10L)
+      .select("doc_id").collect().map(_.getLong(0)).toSet == Set(1L, 2L))
+  }
+
   test("out-of-order arrival is detected and counted per batch") {
     import spark.implicits._
     val mkDoc = (id: Long) =>

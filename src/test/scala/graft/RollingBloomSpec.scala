@@ -15,7 +15,9 @@ import graft.operators.RollingBloom
   *  3. old generations are pruned to a bounded count;
   *  4. the (capacity, fpp) geometry is RECORDED at the first roll and
   *     later rolls use the recorded values — a conf/argument change
-  *     mid-lifecycle cannot produce a merge-incompatible snapshot.
+  *     mid-lifecycle cannot produce a merge-incompatible snapshot;
+  *  5. the read cache holds one snapshot per directory, however many
+  *     batches rolled.
   */
 class RollingBloomSpec extends SparkSpec {
 
@@ -86,5 +88,27 @@ class RollingBloomSpec extends SparkSpec {
     val sz = new java.io.File(dir).listFiles()
       .filter(_.getName.startsWith("bloom-")).map(_.length()).max
     assert(sz < 200000L, s"auto-sized snapshot unexpectedly large: $sz B")
+  }
+
+  test("the read cache keeps one snapshot per directory") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("rb-cache").toString
+    val dirs = Seq(s"$base/a", s"$base/b")
+    (0L until 5L).foreach { b =>
+      dirs.foreach { dir =>
+        RollingBloom.roll(spark, dir,
+          ((b * 100) until (b * 100 + 50)).toDF("k"), "k", Some(b),
+          10000L, 0.01)
+        assert(RollingBloom.read(spark, dir).get.mightContainLong(b * 100))
+        // the replay view (own batch excluded) reads the older snapshot
+        if (b > 0) RollingBloom.read(spark, dir, excludeBatch = Some(b))
+      }
+    }
+    dirs.foreach { dir =>
+      assert(RollingBloom.read(spark, dir).get.mightContainLong(0L))
+      val held = RollingBloom.cachedSnapshots.filter(_.contains(dir + "/"))
+      assert(held.size == 1 && held.head.endsWith("bloom-4.bin"),
+        s"$dir: cached snapshots $held, expected only the newest")
+    }
   }
 }

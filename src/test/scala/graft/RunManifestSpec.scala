@@ -154,6 +154,77 @@ class RunManifestSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.index.tierMinRuns")
   }
 
+  test("index runs open without a schema job, with the inferred schema") {
+    val cfg = CorpusPipeline.Config()
+    val (idx, out) = (tmp("sch-idx"), tmp("sch-out"))
+    val bm = s"${tmp("sch-bm")}/i"
+    spark.conf.set("spark.graft.index.tierMinRuns", "2")
+    spark.conf.set("spark.graft.lsh.indexPrefixes", "4")
+    try {
+      // two batches folded into partitioned runs, then one more append
+      // run next to them: both run layouts of every table
+      (0 until 3).foreach { b =>
+        StreamingFunnel.processBatch(
+          mkDocs(s"sc$b", (b * 100 + 1).toLong to (b * 100 + 12L)),
+          b.toLong, cfg, idx, out, bm25Dir = Some(bm))
+        if (b == 1)
+          StreamingFunnel.maintain(spark, idx, bm25Dir = Some(bm))
+      }
+    } finally {
+      spark.conf.unset("spark.graft.index.tierMinRuns")
+      spark.conf.unset("spark.graft.lsh.indexPrefixes")
+    }
+    val tables = Seq((s"$idx/hashes", ""), (s"$idx/ingest", ""),
+        (s"$idx/lsh", "bands"), (s"$idx/lsh", "shingles")) ++
+      Seq("postings", "dfs", "stats", "docids").map((bm, _))
+    val groups = tables.flatMap { case (logical, t) =>
+      val root = IndexLifecycle.resolveRoot(spark, logical)
+      RunManifest.modulusGroups(RunManifest.read(spark, root).get.live)
+        .map { case (_, runs) => (root, t, runs) }
+    }
+    assert(groups.exists(_._3.exists(_.prefixes.isDefined)) &&
+      groups.exists(_._3.exists(_.prefixes.isEmpty)),
+      s"fixture drift: expected folded and append runs, got $groups")
+
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def jobsOf[A](body: => A): (A, Int) = {
+      Thread.sleep(500)
+      jobs.set(0)
+      val a = body
+      Thread.sleep(1000) // let the listener bus drain
+      (a, jobs.get())
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try groups.foreach { case (root, t, runs) =>
+      val (fast, fastJobs) = jobsOf {
+        val df = RunManifest.readRuns(spark, root, t, runs)
+        df.schema
+        df
+      }
+      val (inferred, inferJobs) = jobsOf {
+        val df = spark.read
+          .option("basePath", if (t.isEmpty) root else s"$root/$t")
+          .parquet(runs.map(r => RunManifest.runPath(root, t, r.id)): _*)
+        df.schema
+        df
+      }
+      assert(inferJobs > 0, "the job count misses schema inference")
+      assert(fastJobs == 0,
+        s"opening $root/$t ran $fastJobs jobs (inference ran $inferJobs)")
+      assert(fast.schema == inferred.schema,
+        s"$root/$t: ${fast.schema.treeString} vs " +
+          inferred.schema.treeString)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toString).sorted.toSeq
+      assert(rows(fast) == rows(inferred), s"$root/$t rows differ")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("probe racing tiered maintenance: never torn, never double-counted") {
     val dir = s"${tmp("race-man")}/idx"
     (0 until 6).foreach { b =>

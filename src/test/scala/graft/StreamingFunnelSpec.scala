@@ -21,7 +21,10 @@ import graft.streaming.StreamingFunnel
   *     funnel's frontier counts;
   *  3. LATENCY: per-batch wall time stays flat across batches (the
   *     cross-batch state is probed through persisted indexes, so work
-  *     tracks the batch, not total history).
+  *     tracks the batch, not total history);
+  *  4. a batch that throws after submitting its async index writes
+  *     joins them before it returns, and its replay equals a clean
+  *     run.
   */
 class StreamingFunnelSpec extends SparkSpec {
 
@@ -94,5 +97,60 @@ class StreamingFunnelSpec extends SparkSpec {
     assert(lastMs <= midMs * factor + slack,
       s"per-batch latency grew ${midMs}ms -> ${lastMs}ms — batch work " +
         "is scaling with total ingested history")
+  }
+
+  test("a failed batch joins its index writes; its replay equals a clean run") {
+    val docs = Tables(spark, ScaleCorpus.sf001, "documents")
+      .select("doc_id", "text", "lang", "source")
+    val batches = Seq(docs.where(col("doc_id") < 250),
+      docs.where(col("doc_id") >= 250))
+    val cfg = CorpusPipeline.Config()
+    def tmp(p: String) = Files.createTempDirectory(p).toString
+    def run(idx: String, out: String) = batches.zipWithIndex.map {
+      case (b, i) => StreamingFunnel.processBatch(b, i.toLong, cfg, idx, out)
+        .copy(ms = 0L)
+    }
+    val (cleanIdx, cleanOut) = (tmp("fail-clean-idx"), tmp("fail-clean-out"))
+    val clean = run(cleanIdx, cleanOut)
+
+    // the survivors write fails (its directory is a regular file) after
+    // both index writes of batch 0 were submitted to the write pool
+    val idx = tmp("fail-idx")
+    val badOut = Files.createTempFile("fail-out", ".file").toString
+    val poolJobs = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .filter(_.startsWith("funnel: "))
+          .foreach(_ => poolJobs.add(e.time))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val thrownAt = try {
+      intercept[Exception](StreamingFunnel.processBatch(batches.head, 0L,
+        cfg, idx, badOut))
+      val t = System.currentTimeMillis()
+      Thread.sleep(3000) // an orphaned write would start its jobs here
+      t
+    } finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val starts = poolJobs.asScala.toSeq
+    assert(starts.nonEmpty, "fixture drift: no index write was submitted")
+    assert(starts.forall(_ <= thrownAt),
+      s"${starts.count(_ > thrownAt)} write-pool jobs started after " +
+        "processBatch threw")
+
+    val out = tmp("fail-out-good")
+    assert(run(idx, out) == clean, "replay stats diverge from a clean run")
+    def ids(df: org.apache.spark.sql.DataFrame, c: String) =
+      df.select(c).collect().map(_.get(0).toString).toSet
+    assert(ids(spark.read.parquet(out), "doc_id") ==
+      ids(spark.read.parquet(cleanOut), "doc_id"))
+    Seq(("hashes", "_h"), ("lsh/bands", "bkey"), ("lsh/shingles", "doc_id"))
+      .foreach { case (t, c) =>
+        assert(ids(spark.read.parquet(s"$idx/$t"), c) ==
+          ids(spark.read.parquet(s"$cleanIdx/$t"), c), s"index $t differs")
+      }
   }
 }
